@@ -39,11 +39,12 @@ def swap_bucketed(spark: SparkSession, table_name: str, staging: str) -> None:
     (mm_bronze_silver.py:230 rewrites the whole table and repoints the
     name) applied to index maintenance: the new index is built and
     VALIDATED under ``staging`` while readers keep serving the old
-    table; the swap itself is two catalog renames plus a drop, never a
-    data copy. Same atomicity caveat as compact_bucketed's swap: a
-    crash between the renames can leave the live name missing (at
-    100 TB this runs under the ingest job's retry/lock, or on
-    Delta/Iceberg where the swap is one transaction).
+    table; the swap is two catalog renames plus a drop, never a data
+    copy. The live table is renamed aside to ``__old`` first, so at
+    every step either the old or the new table is intact; a swap
+    interrupted between the renames is recovered on the next call
+    (``__old`` comes back under the live name, or goes if the live
+    name is already taken), and retrying the same swap completes it.
 
     Reader safety is BOUNDED, not absolute (ADVICE r10): readers
     planned before the swap keep working only until the final DROP of
@@ -55,7 +56,13 @@ def swap_bucketed(spark: SparkSession, table_name: str, staging: str) -> None:
     (Delta/Iceberg) or a deferred garbage-collect of __old instead of
     the inline DROP."""
     old = f"{table_name}__old"
-    spark.sql(f"DROP TABLE IF EXISTS {old}")
+    if spark.catalog.tableExists(old):
+        if spark.catalog.tableExists(table_name):
+            spark.sql(f"DROP TABLE {old}")
+        else:
+            spark.sql(f"ALTER TABLE {old} RENAME TO {table_name}")
+    if not spark.catalog.tableExists(staging):
+        raise ValueError(f"swap_bucketed: staging table {staging} does not exist")
     spark.sql(f"ALTER TABLE {table_name} RENAME TO {old}")
     spark.sql(f"ALTER TABLE {staging} RENAME TO {table_name}")
     spark.sql(f"DROP TABLE {old}")
@@ -84,11 +91,8 @@ def compact_bucketed(
     scan (autoBucketedScan), leaving arbitrary task↔bucket alignment —
     which is why the conf pin is the mechanism, not a hint.
 
-    The swap is write-staging → drop → rename: not atomic (a crash
-    between drop and rename loses the catalog entry — at 100 TB this
-    runs under the ingest job's retry/lock, or on Delta/Iceberg where
-    the swap is a transaction); readers planned BEFORE the swap keep
-    working off the old file listing.
+    The rewrite lands in ``{table_name}__new`` and is swapped in with
+    swap_bucketed, so a crash at any step leaves a readable table.
 
     Returns the compacted file count (== n_buckets). Plan contract
     (pinned in tests/test_plans.py): a probe join against the
@@ -97,7 +101,7 @@ def compact_bucketed(
     """
     conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     prev = spark.conf.get(conf_key, None)
-    staging = f"{table_name}__compact"
+    staging = f"{table_name}__new"
     try:
         spark.conf.set(conf_key, "false")
         df = spark.table(table_name)
@@ -111,6 +115,5 @@ def compact_bucketed(
             spark.conf.unset(conf_key)
         else:
             spark.conf.set(conf_key, prev)
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table_name}")
+    swap_bucketed(spark, table_name, staging)
     return len(spark.table(table_name).inputFiles())

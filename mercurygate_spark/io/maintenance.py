@@ -12,7 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from mercurygate_spark.io.writers import read_delta_or_parquet, write_delta_or_parquet
+from mercurygate_spark.io.fs import dir_size_bytes, path_exists, publish, recover
+from mercurygate_spark.io.writers import read_delta_or_parquet
 
 
 def compact_parquet(
@@ -23,9 +24,9 @@ def compact_parquet(
     """Rewrite a parquet dir into ~target-sized files. Returns the new
     file count. Size estimate comes from the existing footprint via the
     Hadoop FileSystem API (one listing, scheme-aware — io.fs) — no data
-    scan before the rewrite job itself."""
-    from mercurygate_spark.io.fs import delete_path, dir_size_bytes, path_exists
-
+    scan before the rewrite job itself; the rewrite is one write,
+    published with io.fs.publish."""
+    recover(spark, path)
     total = dir_size_bytes(spark, path)
     # ContentSummary counts everything under the dir; exclude the Delta
     # transaction log (JSON commits + checkpoints), which is metadata,
@@ -35,11 +36,7 @@ def compact_parquet(
         total = max(0, total - dir_size_bytes(spark, log_dir))
     n_files = max(1, round(total / target_file_bytes))
     df = read_delta_or_parquet(spark, path)
-    staging = path.rstrip("/") + "__compact"
-    write_delta_or_parquet(df.repartition(n_files), staging, mode="overwrite")
-    final = read_delta_or_parquet(spark, staging)
-    write_delta_or_parquet(final, path, mode="overwrite")
-    delete_path(spark, staging)
+    publish(spark, df.repartition(n_files), path)
     return n_files
 
 
@@ -53,16 +50,12 @@ def cluster_by(
     (repartitionByRange + sortWithinPartitions): each output file owns
     a disjoint key range, so parquet row-group min/max stats make
     key-range filters skip whole files/row groups — the plain-parquet
-    analogue of Delta ZORDER for one clustering dimension."""
-    from mercurygate_spark.io.fs import delete_path
-
+    analogue of Delta ZORDER for one clustering dimension. Published
+    with io.fs.publish."""
+    recover(spark, path)
     df = read_delta_or_parquet(spark, path)
     # file-count default from scan metadata, not df.rdd (which would
     # force a logical→RDD conversion and hide the plan from AQE)
     parts = n_files or max(1, len(df.inputFiles()))
     clustered = df.repartitionByRange(parts, *sort_cols).sortWithinPartitions(*sort_cols)
-    staging = path.rstrip("/") + "__cluster"
-    write_delta_or_parquet(clustered, staging, mode="overwrite")
-    final = read_delta_or_parquet(spark, staging)
-    write_delta_or_parquet(final, path, mode="overwrite")
-    delete_path(spark, staging)
+    publish(spark, clustered, path)

@@ -2079,11 +2079,12 @@ def ivfpq_retrain_swap(
          (ivfpq_encode) written bucketed-by-list under
          ``{table_name}__new`` — the full-corpus rewrite happens OFF
          the serving path while readers keep probing the old index;
-      3. swap: two catalog renames + a drop (io.bucketing.swap_bucketed
-         — the reference's snapshot-replace doctrine,
-         mm_bronze_silver.py:230); the bucket spec carries over, so
-         the post-swap probe join still reads `Bucketed: true` with
-         zero index-side Exchange (plan-pinned in tests/test_plans.py).
+      3. swap: io.bucketing.swap_bucketed (the reference's
+         snapshot-replace doctrine, mm_bronze_silver.py:230) — at
+         every step either the old or the new index is intact, and a
+         retry completes an interrupted swap; the bucket spec carries
+         over, so the post-swap probe join still reads `Bucketed: true`
+         with zero index-side Exchange (plan-pinned in tests/test_plans.py).
 
     ``quantizers`` (optional) bypasses step 1: it MUST be the output of
     ``train_ivfpq_quantizers(grown, id_col, vec_col)`` on the SAME

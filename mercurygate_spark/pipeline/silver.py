@@ -12,8 +12,9 @@ columns, flag active='Y', overwrite Delta (mm_bronze_silver.py:
   inserted, vanished keys kept with active='N' (the reference writes
   active='Y' forever and never flips it — mm_bronze_silver.py:222).
 
-Merge is implemented Delta-free as anti-join + union + overwrite
-(Delta MERGE INTO when the classpath has it — io.writers probes).
+Merge is implemented Delta-free as anti-join + union, published with
+io.fs.publish: at every step of a load either the old or the new table
+is intact on disk, and the next load recovers it before it reads.
 At scale both sides shuffle once on the pk; AQE handles skew.
 """
 
@@ -23,10 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mercurygate_spark.catalog import TableSpec
-from mercurygate_spark.io.writers import (
-    read_delta_or_parquet,
-    write_delta_or_parquet,
-)
+from mercurygate_spark.io.fs import path_exists, publish, recover
+from mercurygate_spark.io.writers import read_delta_or_parquet
 from mercurygate_spark.pipeline.conform import (
     add_soft_delete_flag,
     dedupe_latest,
@@ -46,33 +45,9 @@ def conform(df: DataFrame, spec: TableSpec) -> DataFrame:
 
 def publish_snapshot(df: DataFrame, spec: TableSpec, path: str) -> str:
     """Reference-parity publish: dedupe to latest per pk, then
-    overwrite (the reference's snapshot-replace, K2)."""
+    replace the table (the reference's snapshot-replace, K2)."""
     latest = dedupe_latest(df, spec.primary_key, spec.order_by, tiebreakers=None)
-    return write_delta_or_parquet(latest, path, mode="overwrite")
-
-
-def _staged_swap(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Publish ``df`` over a path its own plan READS: write once to a
-    staging dir, then swap the staging dir in with a filesystem rename
-    (io.fs.rename_path — metadata-only on local disk/HDFS).
-
-    This used to re-read the staging dir and write the bytes a SECOND
-    time to the final path; per merge that doubled the write volume of
-    the whole table (at 100 TB, a full extra history write per load —
-    guide §6). The rename publishes the identical files with zero
-    additional Spark jobs. The staging hop itself can't be skipped:
-    the merged frame's lineage reads ``path``, so overwriting it in
-    place would clobber the merge's own input mid-job."""
-    from mercurygate_spark.io.fs import delete_path, rename_path
-
-    staging = path.rstrip("/") + "__staging"
-    write_delta_or_parquet(df, staging, mode="overwrite")
-    delete_path(spark, path)
-    rename_path(spark, staging, path)
-    # the rename happened behind Spark's back — drop any cached file
-    # listing/data for both paths so the next read lists fresh
-    spark.catalog.refreshByPath(path)
-    spark.catalog.refreshByPath(staging)
+    return publish(df.sparkSession, latest, path)
 
 
 def merge_upsert_scd(
@@ -95,15 +70,14 @@ def merge_upsert_scd(
     OLDER row can never regress the table; incoming wins exact ties) →
     soft-delete flagging. One shuffle per side; no driver-side state.
 
-    Path probes and staging cleanup go through the Hadoop FileSystem
-    API (io.fs) so the first-load/refresh routing works on s3a://,
+    Path probes and the publish go through the Hadoop FileSystem API
+    (io.fs) so the first-load/refresh routing works on s3a://,
     abfss://, hdfs:// — not just the driver's local disk (the
     reference's os.path.exists bug, SURVEY.md §2d-3)."""
-    from mercurygate_spark.io.fs import path_exists
-
     incoming_latest = dedupe_latest(incoming, spec.primary_key, spec.order_by)
+    recover(spark, path)
     if not path_exists(spark, path):
-        write_delta_or_parquet(incoming_latest, path, mode="overwrite")
+        publish(spark, incoming_latest, path)
         return incoming_latest
     existing = read_delta_or_parquet(spark, path)
     all_rows = existing.withColumn("__src", F.lit(0)).unionByName(
@@ -119,28 +93,37 @@ def merge_upsert_scd(
         ).withColumn(
             "active", F.when(F.col("__present").isNull(), F.lit("N")).otherwise(F.col("active"))
         ).drop("__present")
-    _staged_swap(spark, current, path)
+    publish(spark, current, path)
     return read_delta_or_parquet(spark, path)
 
 
 def _scd2_dirs(path: str) -> tuple[str, str]:
-    """The SCD2 table's two physical partitions: ``open/`` (the live
-    version per key — overwritten per load via staged swap) and
-    ``closed/`` (finished versions — append-only, never read by the
-    merge and never rewritten)."""
+    """The SCD2 table's two physical parts: ``open/`` (the live version
+    per key, republished each load) and ``closed/`` (finished versions,
+    one write-once directory per load — see _closed_dir)."""
     root = path.rstrip("/")
     return root + "/open", root + "/closed"
 
 
+def _closed_dir(c_dir: str, load_ts: str) -> str:
+    """The directory holding the versions closed by the load at
+    ``load_ts``. Raw timestamps carry ':' and spaces, which Hadoop
+    ``Path`` and partition discovery misread, so the name is the hex
+    of the timestamp's UTF-8 bytes (injective, [0-9a-f] only)."""
+    return f"{c_dir}/{load_ts.encode().hex()}"
+
+
 def read_scd2_history(spark: SparkSession, path: str) -> DataFrame:
     """Full SCD2 history = open ∪ closed. The ONLY reader of the
-    closed partition — the merge itself never scans it."""
-    from mercurygate_spark.io.fs import path_exists
-
+    closed part — the merge itself never scans it. Each per-load dir
+    is written once, so a recursive parquet listing of ``closed/`` is
+    exactly its rows (hidden publish sidecars are not listed); closed
+    rows carry the open rows' schema."""
     o_dir, c_dir = _scd2_dirs(path)
     out = read_delta_or_parquet(spark, o_dir)
     if path_exists(spark, c_dir):
-        out = out.unionByName(read_delta_or_parquet(spark, c_dir))
+        closed = spark.read.schema(out.schema).option("recursiveFileLookup", "true")
+        out = out.unionByName(closed.parquet(c_dir))
     return out
 
 
@@ -168,16 +151,16 @@ def merge_upsert_scd2(
       snapshot is a no-op — pinned by test_merge_semantics);
     - VANISHED key       → close the open row, no successor.
     Closed history rows are never rewritten — PHYSICALLY: the table
-    is two partitions (``path/open`` and ``path/closed``, see
-    _scd2_dirs); the merge reads ONLY the open rows, APPENDS the newly
-    closed versions to ``closed/``, and staged-swaps the new open set.
-    Per load the scan volume is O(live keys) and the write volume is
-    O(live keys + changes) — not O(full history) for both, which is
-    what the previous single-dir layout paid (at 100 TB, every load
-    re-read and re-wrote years of closed versions just to carry them
-    across the overwrite). ``closed/`` accumulates one file set per
-    load; at scale that is the append-only date-partitioned history
-    every lakehouse compacts on its own schedule.
+    is two parts (``path/open`` and ``path/closed``, see _scd2_dirs);
+    the merge reads ONLY the open rows, publishes the newly closed
+    versions to their own ``closed/`` dir, then publishes the new open
+    set. Per load the scan volume is O(live keys) and the write volume
+    is O(live keys + changes), not O(full history).
+
+    Crash safety: both writes go through io.fs.publish, and a load's
+    closed dir is skipped when it already exists, so re-running a load
+    (after a crash at any step, or after it succeeded) converges to
+    the crash-free history with no duplicate versions.
 
     Plan: reduce incoming to ONE row per pk first (order_by DESC when
     supplied, else a deterministic md5 pick — same contract as
@@ -190,8 +173,6 @@ def merge_upsert_scd2(
     transition counts as a change). Timestamps are caller-supplied
     strings so replay/backfill is deterministic — no wall-clock reads
     inside the merge."""
-    from mercurygate_spark.io.fs import path_exists
-
     incoming = dedupe_latest(incoming, pk, order_by or []).select(*pk, *tracked)
     o_dir, c_dir = _scd2_dirs(path)
 
@@ -204,9 +185,14 @@ def merge_upsert_scd2(
             F.lit(True).alias("is_current"),
         )
 
+    recover(spark, o_dir)
     if not path_exists(spark, o_dir):
-        out = open_row(incoming)
-        write_delta_or_parquet(out, o_dir, mode="overwrite")
+        if path_exists(spark, c_dir):
+            raise RuntimeError(
+                f"SCD2 table {path} has closed history but no open rows; "
+                "refusing to rebuild it as a first load"
+            )
+        publish(spark, open_row(incoming), o_dir)
         return read_scd2_history(spark, path)
 
     # the merge scans ONLY the live rows; closed history stays on disk
@@ -234,12 +220,10 @@ def merge_upsert_scd2(
             *pk, *[F.col(f"i.{c}").alias(c) for c in tracked]
         )
     )
-    # newly closed versions append to the closed partition (the only
-    # write it ever sees); the new open set staged-swaps into open/.
-    # The append must land BEFORE the swap: to_close reads open/, and
-    # both frames read it through the full-outer join above — the
-    # append materializes to_close while its input still exists.
-    write_delta_or_parquet(to_close, c_dir, mode="append")
-    new_open = unchanged.unionByName(to_insert)
-    _staged_swap(spark, new_open, o_dir)
+    # closed rows publish BEFORE open/: to_close reads the open rows
+    # this load replaces. An existing closed dir is already complete.
+    closed_dir = _closed_dir(c_dir, load_ts)
+    if not path_exists(spark, closed_dir):
+        publish(spark, to_close, closed_dir)
+    publish(spark, unchanged.unionByName(to_insert), o_dir)
     return read_scd2_history(spark, path)

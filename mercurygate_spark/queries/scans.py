@@ -1015,10 +1015,9 @@ def sink_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     doctrine as sink_merge_upsert, extended over time.
 
     Scale shape: per load, ONE pk-shuffle full-outer join between the
-    open rows and the incoming snapshot plus a closed-partition union
-    — closed history is never rewritten row-by-row (at 100 TB the
-    closed partition would be date-partitioned parquet appends; here
-    it rides the same overwrite as the staging swap)."""
+    open rows and the incoming snapshot; closed history is never
+    rewritten — each load's closed versions are published once to
+    their own directory."""
     import shutil as _shutil
 
     from mercurygate_spark.pipeline.silver import merge_upsert_scd2
@@ -1031,7 +1030,6 @@ def sink_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _tmp("scd2_history")
     _shutil.rmtree(path, ignore_errors=True)
-    _shutil.rmtree(path + "__staging", ignore_errors=True)
     hist = None
     for g in sorted(_SCD2_TS):
         hist = merge_upsert_scd2(

@@ -1,10 +1,10 @@
 """Capture .explain("formatted") for a list of keys into
-plans/r15/<key>_<tag>.txt — the before/after plan evidence the
-optimization round commits (judge checks plan claims against these).
+plans/r<N>/<key>_<tag>.txt — the before/after plan evidence an
+optimization round commits (plan claims are checked against these).
 
 Usage:
-    python scripts/capture_plans_r15.py --tag before --only text_bpe_train,...
-    python scripts/capture_plans_r15.py --tag after   # all headline keys
+    python scripts/capture_plans.py --round 16 --tag before --only text_bpe_train,...
+    python scripts/capture_plans.py --round 16 --tag after   # all headline keys
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ sys.path.insert(0, REPO)
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
+    ap.add_argument("--round", type=int, required=True)
     ap.add_argument("--tag", required=True)
     ap.add_argument("--only", default=None)
     ap.add_argument("--cpus", type=int, default=8)
@@ -29,14 +30,14 @@ def main() -> None:
     from mercurygate_spark.queries import all_queries
     from mercurygate_spark.session import get_spark
 
-    spark = get_spark(app_name="capture_plans_r15", cpus=args.cpus)
+    spark = get_spark(app_name=f"capture_plans_r{args.round}", cpus=args.cpus)
     queries = all_queries()
     names = [n for n in HEADLINE if n in queries]
     if args.only:
         pats = [p.strip() for p in args.only.split(",") if p.strip()]
         names = [n for n in names if any(n == p or n.startswith(p) for p in pats)]
 
-    out_dir = os.path.join(REPO, "plans", "r15")
+    out_dir = os.path.join(REPO, "plans", f"r{args.round}")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         try:

@@ -170,7 +170,7 @@ def main() -> None:
                 json.dump(out, f, indent=1)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {idx_name}")
-        spark.sql(f"DROP TABLE IF EXISTS {idx_name}__compact")
+        spark.sql(f"DROP TABLE IF EXISTS {idx_name}__new")
         shutil.rmtree(scratch, ignore_errors=True)
 
 

@@ -33,3 +33,12 @@ def duck_con(sf_dir):
     con = duck_connection(sf_dir)
     yield con
     con.close()
+
+
+def pytest_terminal_summary(terminalreporter):
+    from tests.registry_sample import sampling_warning
+
+    msg = sampling_warning()
+    if msg:
+        terminalreporter.write_sep("!", "registry sampling active", yellow=True, bold=True)
+        terminalreporter.write_line(msg, yellow=True, bold=True)

@@ -19,12 +19,16 @@ Full-registry correctness is still gated every round, twice over:
 
 The sample is a FIXED stride over the sorted key list — reproducible,
 no randomness, and uniform across query families (sorted names
-interleave agg_/dedup_/pipeline_/sim_/text_ prefixes).
+interleave agg_/dedup_/pipeline_/sim_/text_ prefixes). Whenever a
+sweep is sampled, the session summary says so (conftest.py).
 """
 
 from __future__ import annotations
 
 import os
+
+# (kept, total) per sampled sweep, reported in the session summary
+SAMPLED: list[tuple[int, int]] = []
 
 
 def full_tests() -> bool:
@@ -37,4 +41,17 @@ def registry_sample(names, stride: int = 4) -> list[str]:
     names = sorted(names)
     if full_tests():
         return names
+    SAMPLED.append((len(names[::stride]), len(names)))
     return names[::stride]
+
+
+def sampling_warning() -> str | None:
+    """The session-summary warning when any sweep ran a sample."""
+    if not SAMPLED:
+        return None
+    sweeps = ", ".join(f"{k}/{n}" for k, n in SAMPLED)
+    return (
+        f"REGISTRY SAMPLED: whole-registry sweeps ran only a key sample "
+        f"({sweeps} keys). A green run does NOT imply "
+        "registry-wide parity; the closing gate is SPARK_GRAFT_FULL_TESTS=1."
+    )

@@ -110,6 +110,23 @@ def test_bronze_to_silver_end_to_end(spark, staged, tmp_path):
     assert ledger.to_df(spark).columns == ["table", "database", "count", "execution_time"]
 
 
+def test_run_silver_reads_bronze_through_uri(spark, staged, tmp_path):
+    """run_silver probes bronze through the Hadoop FileSystem API, so a
+    scheme-qualified base (file://, and likewise s3a://, abfss://)
+    routes to the tables instead of skipping every one of them."""
+    bronze = str(tmp_path / "bronze")
+    run_bronze(
+        spark, LocalFetcher(staged), str(tmp_path / "staging"), bronze, "mm",
+        "pytest", RUN_TS, mode="initial",
+    )
+    tables = run_silver(
+        spark, f"file://{bronze}", f"file://{tmp_path}/silver", "mm", mode="merge"
+    )
+    assert sorted(tables) == ["claim", "claim_diary", "claim_payment"]
+    assert tables["claim"].count() == 3
+    assert os.path.isdir(tmp_path / "silver" / "claim")
+
+
 def test_zero_row_guard(spark, tmp_path):
     p = tmp_path / "empty.txt"
     p.write_text("claimid,claimnumber,datecreated\n")
